@@ -3,7 +3,8 @@ package graft.jobs
 import com.fasterxml.jackson.databind.JsonNode
 
 import graft.schema.SchemaRegistry
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Runnable entry point for the collection job — the analog of dropping a
   * job message on the reference's work queue (jobproducer.js:210-232
@@ -86,8 +87,11 @@ object CollectMain {
         spark.table(spec.datasetName).count()
       case Some("parquet") =>
         val path = opt("Sink").get.get("Path").asText
-        CollectJob.run(spark, spec).write.mode("overwrite").parquet(path)
-        spark.read.parquet(path).count()
+        // counted as the write runs, not by reading the files back
+        val written = new Observation()
+        CollectJob.run(spark, spec).observe(written, count(lit(1)).as("n"))
+          .write.mode("overwrite").parquet(path)
+        written.get("n").asInstanceOf[Long]
       case Some("jdbc") =>
         val s = opt("Sink").get
         val props = new java.util.Properties()

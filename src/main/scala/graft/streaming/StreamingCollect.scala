@@ -44,6 +44,7 @@ object StreamingCollect {
       .option("header", in.csvHeader)
       .option("sep", in.fieldDelimiter)
       .option("quote", in.quoteCharacter)
+      .option("escape", in.quoteCharacter) // doubled quotes, as IngestReader
     spec.pathGlobFilter.foreach(g => r = r.option("pathGlobFilter", g))
     val raw = r.schema(spec.schema.rawSchema).csv(spec.inputDir)
     Coerce(raw, spec.schema)
@@ -122,6 +123,7 @@ object StreamingCollect {
         .option("header", in.csvHeader)
         .option("sep", in.fieldDelimiter)
         .option("quote", in.quoteCharacter)
+        .option("escape", in.quoteCharacter) // doubled quotes, as IngestReader
         .schema(spec.schema.rawSchema)
         .csv(files.toSeq: _*)
       Some(applyQuery(Coerce(raw, spec.schema), spec))

@@ -64,6 +64,26 @@ class CollectMainSpec extends AnyFunSuite {
     assert(CollectMain.run(spark, job) == 5)
   }
 
+  test("parquet sink reports the rows it wrote") {
+    val dir = vpcCsv(10)
+    val out = Files.createTempDirectory("graft_collect_parquet")
+      .resolve("out").toString
+    val job = s"""{
+      |  "DataType": "VPCFlow",
+      |  "S3Folders": ["$dir"],
+      |  "DatasetName": "vpc_main_parquet",
+      |  "QueryString": "SELECT * FROM S3Object[*] s WHERE s.bytes > 1003",
+      |  "Sink": {"Type": "parquet", "Path": "$out"}
+      |}""".stripMargin
+    assert(CollectMain.run(spark, job) == 7)
+    assert(spark.read.parquet(out).count() == 7)
+    // overwrite: a second run reports its own rows, not the sum
+    assert(CollectMain.run(spark, job) == 7)
+    assert(spark.read.parquet(out).count() == 7)
+    assert(CollectMain.run(spark, job.replace("1003", "9999")) == 0)
+    assert(spark.read.parquet(out).count() == 0)
+  }
+
   test("unknown builtin and unknown sink fail loudly") {
     intercept[IllegalArgumentException] {
       CollectMain.run(spark,

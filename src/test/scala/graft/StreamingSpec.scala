@@ -79,6 +79,44 @@ class StreamingSpec extends AnyFunSuite {
       "rows from the unnamed object leaked in — source is listing-driven")
   }
 
+  test("streaming CSV readers parse doubled quotes and backslashes like " +
+      "IngestReader") {
+    // RFC 4180 / Papa Parse: a quote inside a quoted field is doubled, and
+    // a backslash is an ordinary character
+    val schema = graft.schema.SchemaRegistry.classicLB
+    val rows = Seq(
+      "2015-05-13T23:39:43.945958Z lb 192.168.131.39:2817 10.0.0.1:80 " +
+        "0.000073 0.001048 0.000057 200 200 0 29 " +
+        "\"GET http://x/?q=\"\"a b\"\" HTTP/1.1\" \"agent C:\\dir\\\" - -",
+      "2015-05-13T23:39:44.000000Z lb 192.168.131.39:2818 10.0.0.1:80 " +
+        "0.1 0.2 0.3 404 404 0 7 \"GET http://y/ HTTP/1.1\" " +
+        "\"say \"\"hi\"\"\" - -")
+    val dataDir = Files.createTempDirectory("graft_quote_data")
+    val obj = dataDir.resolve("elb.log")
+    Files.writeString(obj, rows.mkString("", "\n", "\n"))
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    val expected = sorted(
+      graft.sources.IngestReader.csv(spark, schema, obj.toString))
+    assert(expected.exists(_.contains("GET http://x/?q=\"a b\" HTTP/1.1")))
+    assert(expected.exists(_.contains("agent C:\\dir\\")))
+
+    val manifestDir = Files.createTempDirectory("graft_quote_m")
+    Files.writeString(manifestDir.resolve("manifest-000.txt"),
+      obj.toString + "\n")
+    val outDir = Files.createTempDirectory("graft_quote_out").toString
+    val spec = StreamingCollect.StreamSpec(schema = schema,
+      inputDir = dataDir.toString)
+    StreamingCollect.runManifestBounded(spark, spec,
+      manifestDir.toString, outDir)
+    assert(sorted(spark.read.parquet(outDir)) == expected)
+
+    val streamed = StreamingCollect.runBounded(spark,
+      StreamingCollect.reader(spark, spec), "graft_quote_stream",
+      outputMode = "append")
+    assert(sorted(streamed) == expected)
+  }
+
   test("continuous pipeline: per-batch Invocations ledger accounts every row") {
     // runContinuousCollection chains manifest → coerce → WHERE → JDBC
     // append → status row. Two manifests at one-per-trigger must produce

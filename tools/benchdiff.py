@@ -11,23 +11,24 @@ import json, math, sys
 
 def load(path):
     txt = open(path).read()
+    line = None
     try:
         j = json.loads(txt)
-        if "parsed" in j:
-            return j["parsed"]
-        if "metric" in j:
-            return j
+        if isinstance(j, dict) and "parsed" in j:
+            line = j["parsed"]
+        elif isinstance(j, dict) and "metric" in j:
+            line = j
     except json.JSONDecodeError:
-        pass
-    line = None
-    for ln in txt.splitlines():
-        if '"metric"' in ln:
-            try:
-                line = json.loads(ln[ln.index('{"metric"'):])
-            except Exception:
-                pass
-    if line is None:
-        sys.exit(f"no canonical line in {path}")
+        for ln in txt.splitlines():
+            if '"metric"' in ln:
+                try:
+                    line = json.loads(ln[ln.index('{"metric"'):])
+                except Exception:
+                    pass
+    # a BENCH_r*.json of a failed run carries "parsed": null
+    if not isinstance(line, dict) or "queries" not in line \
+            or "value" not in line:
+        sys.exit(f"no canonical line with queries and value in {path}")
     return line
 
 
