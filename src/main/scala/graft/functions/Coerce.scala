@@ -37,20 +37,20 @@ import org.apache.spark.sql.functions._
   */
 object Coerce {
 
-  def asLong(c: Column): Column = CoerceCell(c, "toLong")
+  def asLong(c: Column): Column = CoerceCell(c, CoerceKernel.ToLong)
 
-  def asInt(c: Column): Column = CoerceCell(c, "toInt")
+  def asInt(c: Column): Column = CoerceCell(c, CoerceKernel.ToInt)
 
-  def asDouble(c: Column): Column = CoerceCell(c, "toDouble")
+  def asDouble(c: Column): Column = CoerceCell(c, CoerceKernel.ToDouble)
 
-  def asFloat(c: Column): Column = CoerceCell(c, "toFloat")
+  def asFloat(c: Column): Column = CoerceCell(c, CoerceKernel.ToFloat)
 
-  def asBoolean(c: Column): Column = CoerceCell(c, "toBool")
+  def asBoolean(c: Column): Column = CoerceCell(c, CoerceKernel.ToBool)
 
-  def asString(c: Column): Column = CoerceCell(c, "toStr")
+  def asString(c: Column): Column = CoerceCell(c, CoerceKernel.ToStr)
 
   def asTimestamp(c: Column): Column =
-    CoerceCell(c, "toTrimmed").try_cast("timestamp")
+    CoerceCell(c, CoerceKernel.ToTrimmed).try_cast("timestamp")
 
   def forType(t: SeqType, c: Column): Column = t match {
     case SeqType.SInteger => asInt(c)
@@ -60,7 +60,8 @@ object Coerce {
     case SeqType.SBoolean => asBoolean(c)
     case SeqType.SDate => asTimestamp(c)
     case SeqType.SString(_) | SeqType.SText => asString(c)
-    case SeqType.SJson => CoerceCell(c, "toJson") // opaque JSON string
+    case SeqType.SJson =>
+      CoerceCell(c, CoerceKernel.ToJson) // opaque JSON string
   }
 
   /** Apply the coercion pass: all-string parsed batch → typed DataFrame.

@@ -225,43 +225,72 @@ object CoerceKernels {
     if (s == null || isNullToken(s, 0, s.numBytes)) null else s
 }
 
+/** The kernel of one coerced cell: the [[CoerceKernels]] method its
+  * generated code calls, its result type, and the same call for
+  * interpreted evaluation (`slot` is ignored by string kernels). */
+sealed abstract class CoerceKernel(val method: String, val dataType: DataType)
+    extends Serializable {
+  def apply(s: UTF8String, slot: CoerceSlot): Any
+}
+
+object CoerceKernel {
+  case object ToLong extends CoerceKernel("toLong", LongType) {
+    def apply(s: UTF8String, slot: CoerceSlot): Any =
+      CoerceKernels.toLong(s, slot)
+  }
+  case object ToInt extends CoerceKernel("toInt", IntegerType) {
+    def apply(s: UTF8String, slot: CoerceSlot): Any =
+      CoerceKernels.toInt(s, slot)
+  }
+  case object ToDouble extends CoerceKernel("toDouble", DoubleType) {
+    def apply(s: UTF8String, slot: CoerceSlot): Any =
+      CoerceKernels.toDouble(s, slot)
+  }
+  case object ToFloat extends CoerceKernel("toFloat", FloatType) {
+    def apply(s: UTF8String, slot: CoerceSlot): Any =
+      CoerceKernels.toFloat(s, slot)
+  }
+  case object ToBool extends CoerceKernel("toBool", BooleanType) {
+    def apply(s: UTF8String, slot: CoerceSlot): Any =
+      CoerceKernels.toBool(s, slot)
+  }
+  case object ToStr extends CoerceKernel("toStr", StringType) {
+    def apply(s: UTF8String, slot: CoerceSlot): Any = CoerceKernels.toStr(s)
+  }
+  case object ToJson extends CoerceKernel("toJson", StringType) {
+    def apply(s: UTF8String, slot: CoerceSlot): Any = CoerceKernels.toJson(s)
+  }
+  case object ToTrimmed extends CoerceKernel("toTrimmed", StringType) {
+    def apply(s: UTF8String, slot: CoerceSlot): Any =
+      CoerceKernels.toTrimmed(s)
+  }
+}
+
 /** One coerced cell: a Catalyst expression whose generated code is a single
-  * call into [[CoerceKernels]] (`kernel` names the method). Keeping the
-  * generated code per cell this small keeps an ingest stage's generated
-  * method under HotSpot's 8000-byte JIT limit (`DontCompileHugeMethods`,
-  * on by default), so the stage runs compiled rather than interpreted. */
-case class CoerceCell(child: Expression, kernel: String)
+  * call into [[CoerceKernels]]. Keeping the generated code per cell this
+  * small keeps an ingest stage's generated method under HotSpot's
+  * 8000-byte JIT limit (`DontCompileHugeMethods`, on by default), so the
+  * stage runs compiled rather than interpreted. */
+case class CoerceCell(child: Expression, kernel: CoerceKernel)
     extends UnaryExpression {
 
-  override def dataType: DataType = kernel match {
-    case "toLong" => LongType
-    case "toInt" => IntegerType
-    case "toDouble" => DoubleType
-    case "toFloat" => FloatType
-    case "toBool" => BooleanType
-    case "toStr" | "toJson" | "toTrimmed" => StringType
-  }
+  override def dataType: DataType = kernel.dataType
+
+  /** Every kernel can return NULL (a null token, `-`, a non-numeric or
+    * out-of-range value), whatever the input's nullability. */
+  override def nullable: Boolean = true
 
   private def primitive: Boolean = !dataType.isInstanceOf[StringType]
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$kernel expects string, got $t")
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"${kernel.method} expects string, got $t")
   }
 
   override def eval(input: InternalRow): Any = {
-    val s = child.eval(input).asInstanceOf[UTF8String]
     val slot = new CoerceSlot
-    val v = kernel match {
-      case "toLong" => CoerceKernels.toLong(s, slot)
-      case "toInt" => CoerceKernels.toInt(s, slot)
-      case "toDouble" => CoerceKernels.toDouble(s, slot)
-      case "toFloat" => CoerceKernels.toFloat(s, slot)
-      case "toBool" => CoerceKernels.toBool(s, slot)
-      case "toStr" => CoerceKernels.toStr(s)
-      case "toJson" => CoerceKernels.toJson(s)
-      case "toTrimmed" => CoerceKernels.toTrimmed(s)
-    }
+    val v = kernel(child.eval(input).asInstanceOf[UTF8String], slot)
     if (primitive && slot.isNull) null else v
   }
 
@@ -270,13 +299,13 @@ case class CoerceCell(child: Expression, kernel: String)
     * so a cell adds no branch and no local besides its value. A bound
     * input column's generated value is already null when its null flag is
     * set (row and column-vector reads generate `isNull ? null : get(i)`);
-    * any other child is masked here. */
+    * any other nullable child is masked here. */
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode = {
     val c = child.genCode(ctx)
     val in = if (c.isNull == FalseLiteral || child.isInstanceOf[BoundReference])
       s"${c.value}" else s"(${c.isNull} ? null : ${c.value})"
-    val call = s"graft.functions.CoerceKernels.$kernel"
+    val call = s"graft.functions.CoerceKernels.${kernel.method}"
     val jt = CodeGenerator.javaType(dataType)
     if (primitive) {
       val slotClass = classOf[CoerceSlot].getName
@@ -299,6 +328,6 @@ case class CoerceCell(child: Expression, kernel: String)
 object CoerceCell {
   /** A non-string input is read as its string form (the cast is dropped by
     * the optimizer when the input already is a string). */
-  def apply(c: Column, kernel: String): Column = GraftSqlBridge.column(
+  def apply(c: Column, kernel: CoerceKernel): Column = GraftSqlBridge.column(
     CoerceCell(GraftSqlBridge.expression(c.cast("string")), kernel))
 }

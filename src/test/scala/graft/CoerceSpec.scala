@@ -128,29 +128,48 @@ class CoerceSpec extends AnyFunSuite {
     }
   }
 
+  /** The token column as the kernels meet it: a scan column (a bound
+    * reference), a nullable composite expression (masked in generated
+    * code) and a non-nullable one, whose missing values arrive as null
+    * tokens (no mask, and the cell must still report NULL). */
+  private val inputs: Seq[(String, Column, Boolean)] = Seq(
+    ("column", col("v"), true),
+    ("composite", concat(col("v"), lit("")), true),
+    ("non-nullable", coalesce(col("v"), lit("null")), false))
+
   private def differential(mode: String, wholeStage: Boolean): Unit =
     withConfs("spark.sql.codegen.factoryMode" -> mode,
         "spark.sql.codegen.wholeStage" -> wholeStage.toString) {
       val tokens = hostile ++ generated(3000, 20261017L)
-      val in = tokenFrame(tokens)
-      val out = in.select(col("i") +: pairs.flatMap { case (name, ref, k) =>
-        Seq(ref(col("v")).as(s"ref_$name"), k(col("v")).as(s"new_$name"))
-      }: _*)
-      val stages = out.queryExecution.executedPlan.collect {
-        case w: WholeStageCodegenExec => w
+      val frame = tokenFrame(tokens)
+      for ((input, v, nullable) <- inputs) {
+        val in = frame.select(col("i"), v.as("v"))
+        assert(in.schema("v").nullable == nullable, s"$input: ${in.schema}")
+        val out = in.select(col("i") +: pairs.flatMap {
+          case (name, ref, k) =>
+            Seq(ref(col("v")).as(s"ref_$name"), k(col("v")).as(s"new_$name"))
+        }: _*)
+        val notNullable = out.schema.filter(f =>
+          f.name.startsWith("new_") && !f.nullable)
+        assert(notNullable.isEmpty, s"$input: non-nullable $notNullable")
+        val stages = out.queryExecution.executedPlan.collect {
+          case w: WholeStageCodegenExec => w
+        }
+        assert(stages.nonEmpty == wholeStage,
+          s"$mode/$input: codegen stages $stages")
+        val rows = out.collect().sortBy(_.getInt(0))
+        assert(rows.length == tokens.length)
+        val bad = for {
+          r <- rows.toSeq
+          ((name, _, _), j) <- pairs.zipWithIndex
+          ref = canon(r.get(1 + 2 * j))
+          got = canon(r.get(2 + 2 * j))
+          if ref != got
+        } yield s"$name(${tokenLiteral(tokens(r.getInt(0)))}): " +
+          s"tree=$ref kernel=$got"
+        assert(bad.isEmpty, s"$mode/$input: ${bad.size} mismatches\n" +
+          bad.take(40).mkString("\n"))
       }
-      assert(stages.nonEmpty == wholeStage, s"$mode: codegen stages $stages")
-      val rows = out.collect().sortBy(_.getInt(0))
-      assert(rows.length == tokens.length)
-      val bad = for {
-        r <- rows.toSeq
-        ((name, _, _), j) <- pairs.zipWithIndex
-        ref = canon(r.get(1 + 2 * j))
-        got = canon(r.get(2 + 2 * j))
-        if ref != got
-      } yield s"$name(${tokenLiteral(tokens(r.getInt(0)))}): tree=$ref kernel=$got"
-      assert(bad.isEmpty, s"$mode: ${bad.size} mismatches\n" +
-        bad.take(40).mkString("\n"))
     }
 
   private def tokenLiteral(t: String): String =
