@@ -55,8 +55,4 @@ object Tables {
 
   val all: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
-
-  /** Register every table as a temp view (used by the native-SQL surface). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => t(spark, dir, n).createOrReplaceTempView(n))
 }

@@ -17,6 +17,12 @@ object GraftSqlBridge {
       : DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A new session sharing the caller's SparkContext, cache and catalog,
+    * with a copy of its runtime conf, temp views and functions
+    * (classic.SparkSession.cloneSession is private[sql]). */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
   /** Experimental-methods handle for extra-strategy registration. */
   def experimental(spark: SparkSession): ExperimentalMethods =
     spark.asInstanceOf[classic.SparkSession].experimental

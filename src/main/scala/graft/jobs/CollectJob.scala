@@ -17,8 +17,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * *into* the scan instead of applied to a staged copy — the single biggest
   * architectural simplification (SURVEY §1.1 "in-flight staging table").
   *
-  * At 100 TB: the read is a parallel file scan partitioned by
-  * `maxPartitionBytes`; the filter prunes columns/rows before any shuffle;
+  * At 100 TB: the read is a parallel file scan; gz/zip objects are not
+  * splittable, so each is one whole unit, and `IngestReader` packs the
+  * units into tasks by their compressed bytes (up to `maxPartitionBytes`
+  * per task); the filter prunes columns/rows before any shuffle;
   * the save is a parallel parquet write. Admission control (NumberofWorkers,
   * SURVEY §4) maps to executor count / dynamic allocation — not re-modeled.
   */

@@ -14,9 +14,8 @@ import org.apache.spark.sql.functions._
   *  - recording a new query for the same (DatabaseName, TableName)
   *    deactivates prior entries — the reference's "deactivate previous
   *    queries on same table" step (commonsharedv3.js:740-801);
-  *  - the three GSI-shaped lookups (by table, by dataType+name, by
-  *    type+time) are plain filters; Catalyst replaces index selection
-  *    (SURVEY §2.6).
+  *  - the GSI-shaped lookups are plain filters; Catalyst replaces index
+  *    selection (SURVEY §2.6).
   */
 object QueryRegistry {
 
@@ -52,12 +51,6 @@ object QueryRegistry {
     * here they are just filters). */
   def byTable(registry: DataFrame, db: String, table: String): DataFrame =
     registry.where(col("DatabaseName") === db && col("TableName") === table)
-
-  def byDataType(registry: DataFrame, dataType: String,
-      queryName: Option[String] = None): DataFrame = {
-    val base = registry.where(col("DataType") === dataType)
-    queryName.fold(base)(n => base.where(col("QueryName") === n))
-  }
 
   def activeQueries(registry: DataFrame): DataFrame =
     registry.where(col("Active") && !col("Archive"))

@@ -4,8 +4,9 @@ import java.io.ByteArrayInputStream
 import java.util.zip.ZipInputStream
 
 import graft.functions.Coerce
-import graft.schema.DataTypeSchema
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.schema.{DataTypeSchema, InputSerialization}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, GraftSqlBridge,
+  SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Log-object ingest readers (SURVEY §2.1, S4-S9).
@@ -26,7 +27,9 @@ import org.apache.spark.sql.functions._
   *  - ZIP: not a splittable Hadoop codec → `binaryFile` source +
   *    a per-file inflate keeping the reference's single-entry constraint
   *    (worker.js:538-611). ZIP members are decoded on executors, so the read
-  *    still scales horizontally by file count.
+  *    still scales horizontally by file count;
+  *  - every scan packs whole objects into tasks by their compressed bytes
+  *    (`scan`), the analog of one worker per download batch.
   *
   * All readers return the *typed* DataFrame (coercion applied), matching the
   * worker's parse→coerce pipeline order.
@@ -45,34 +48,59 @@ object IngestReader {
   def csv(spark: SparkSession, schema: DataTypeSchema,
       paths: String*): DataFrame = {
     val in = schema.input
-    val reader = spark.read
-      .option("header", in.csvHeader)
-      .option("sep", in.fieldDelimiter)
-      .option("lineSep", in.recordDelimiter)
-      .option("quote", in.quoteCharacter)
-      // Papa-Parse parity (found by IngestSpec's §1.2 dialect fuzz):
-      // a quote inside a quoted field is escaped by DOUBLING (RFC 4180,
-      // Papa's only convention) — Spark's default escape is backslash,
-      // which both misreads doubled quotes and eats literal backslashes.
-      .option("escape", in.quoteCharacter)
-      // Quoted fields may contain the record delimiter (Papa handles
-      // this natively). Costs per-file (not per-split) read parallelism
-      // — the reference's own model: its worker parses each S3 object
-      // in memory; ingest scale-out is by object count either way.
-      .option("multiLine", true)
-      .option("mode", "PERMISSIVE")
     if (in.csvHeader) {
-      val raw = reader.csv(paths: _*)
+      val raw = scan(spark)(_.options(csvOptions(in)).csv(paths: _*))
       val present = raw.columns.toSet
       Coerce(raw.select(schema.fields.map { f =>
         if (present(f.name)) col(s"`${f.name}`").as(f.name)
         else lit(null).cast("string").as(f.name)
       }: _*), schema)
     } else {
-      val raw = reader.schema(schema.rawSchema).csv(paths: _*)
+      val raw = scan(spark)(
+        _.options(csvOptions(in)).schema(schema.rawSchema).csv(paths: _*))
       Coerce(raw.toDF(schema.fields.map(_.name).take(raw.columns.length) ++
         raw.columns.drop(schema.fields.length): _*), schema)
     }
+  }
+
+  /** Reader options derived from the InputSerialization, shared by `csv`
+    * and `csvWithErrors` so both paths parse a document the same way. */
+  private def csvOptions(in: InputSerialization): Map[String, String] = Map(
+    "header" -> in.csvHeader.toString,
+    "sep" -> in.fieldDelimiter,
+    "lineSep" -> in.recordDelimiter,
+    "quote" -> in.quoteCharacter,
+    // Papa-Parse parity (found by IngestSpec's §1.2 dialect fuzz):
+    // a quote inside a quoted field is escaped by DOUBLING (RFC 4180,
+    // Papa's only convention) — Spark's default escape is backslash,
+    // which both misreads doubled quotes and eats literal backslashes.
+    "escape" -> in.quoteCharacter,
+    // Quoted fields may contain the record delimiter (Papa handles
+    // this natively). Costs per-file (not per-split) read parallelism
+    // — the reference's own model: its worker parses each S3 object
+    // in memory; ingest scale-out is by object count either way.
+    "multiLine" -> "true",
+    "mode" -> "PERMISSIVE")
+
+  /** Every ingest file scan (and its header or schema-inference pass)
+    * goes through here. A gz or zip object is not splittable, so it is
+    * one unit of scan work, and Spark packs units into tasks charging
+    * each a `spark.sql.files.openCostInBytes` (4 MB) open cost. Against
+    * 15–600 KB log objects that cost dominates: packing counts files, and
+    * since it packs largest first, the big objects share one task. The
+    * read is therefore planned on a clone of the session with an open
+    * cost of 1 byte, which packs the objects by their compressed bytes and
+    * puts the largest ones in different tasks. (Not 0: the split size is
+    * at least the open cost, and a split size of 0 fails on splittable
+    * objects smaller than the task count.) The analyzed plan is then
+    * re-bound to the caller's session: the scan takes its packing conf
+    * from its relation's session (the clone), everything downstream runs
+    * in the caller's session, and the caller's conf is left as it was. */
+  private def scan(spark: SparkSession)(
+      read: DataFrameReader => DataFrame): DataFrame = {
+    val packed = GraftSqlBridge.cloneSession(spark)
+    packed.conf.set("spark.sql.files.openCostInBytes", 1L)
+    GraftSqlBridge.ofRows(spark, read(packed.read).queryExecution.analyzed)
   }
 
   /** JSON read + optional one-level root-element unnest (CloudTrail
@@ -80,16 +108,12 @@ object IngestReader {
   def json(spark: SparkSession, schema: DataTypeSchema,
       paths: String*): DataFrame = {
     val root = schema.input.rootElement
-    if (root.isEmpty) {
-      val raw = spark.read.json(paths: _*)
-      coerceFromJsonish(raw, schema)
-    } else {
-      // JSON-lines mode: one document per line (CloudTrail-style gz objects
-      // are single-line whole-doc JSON; a file of several docs also works).
-      val raw = spark.read.json(paths: _*)
-      val exploded = raw.select(explode(col(root)).as("r")).select(col("r.*"))
-      coerceFromJsonish(exploded, schema)
-    }
+    // JSON-lines mode: one document per line (CloudTrail-style gz objects
+    // are single-line whole-doc JSON; a file of several docs also works).
+    val raw = scan(spark)(_.json(paths: _*))
+    if (root.isEmpty) coerceFromJsonish(raw, schema)
+    else coerceFromJsonish(
+      raw.select(explode(col(root)).as("r")).select(col("r.*")), schema)
   }
 
   /** JSON attributes arrive typed from spark.read.json; normalize each to a
@@ -126,30 +150,25 @@ object IngestReader {
     * reference's dump. */
   def csvWithErrors(spark: SparkSession, schema: DataTypeSchema,
       jobid: String, paths: String*): (DataFrame, DataFrame) = {
-    val in = schema.input
     import org.apache.spark.sql.types.{StructField, StringType}
     val withCorrupt = org.apache.spark.sql.types.StructType(
       schema.rawSchema.fields :+ StructField("_corrupt_record", StringType))
-    val raw = spark.read
-      .option("header", in.csvHeader)
-      .option("sep", in.fieldDelimiter)
-      .option("quote", in.quoteCharacter)
-      .option("escape", in.quoteCharacter) // Papa doubled-quote parity
-      .option("multiLine", true)
-      .option("mode", "PERMISSIVE")
+    val raw = scan(spark)(_.options(csvOptions(schema.input))
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .schema(withCorrupt)
-      .csv(paths: _*)
+      .csv(paths: _*))
+      // taken before the cache: input_file_name is empty over cached rows
+      .withColumn("_path", input_file_name())
       .cache() // corrupt-record column requires the same scan for both sides
     val good = Coerce(raw.where(col("_corrupt_record").isNull)
-      .drop("_corrupt_record"), schema)
+      .drop("_corrupt_record", "_path"), schema)
     val errors = raw.where(col("_corrupt_record").isNotNull)
       .select(
         lit(jobid).as("jobid"),
         lit("").as("invocationid"),
         (unix_timestamp() * 0L).as("updateunixtime"), // filled by caller
         col("_corrupt_record").as("errormessage"),
-        input_file_name().as("path"),
+        col("_path").as("path"),
         lit("").as("loggroup"), lit("").as("logstream"))
     (good, errors)
   }
@@ -160,7 +179,7 @@ object IngestReader {
     * path retained for lineage. */
   def zipLines(spark: SparkSession, paths: String*): DataFrame = {
     import spark.implicits._
-    val bin = spark.read.format("binaryFile").load(paths: _*)
+    val bin = scan(spark)(_.format("binaryFile").load(paths: _*))
       .select(col("path"), col("content"))
     bin.as[(String, Array[Byte])].flatMap { case (path, bytes) =>
       val zis = new ZipInputStream(new ByteArrayInputStream(bytes))

@@ -280,10 +280,6 @@ object StreamingCollect {
     spark.table(queryName)
   }
 
-  /** tmpfs when present (ephemeral scratch wants RAM speed), else the
-    * JVM temp dir. */
-  private[graft] def fastTmpRoot: String = graft.Scratch.root
-
   private def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty)
       .foreach(deleteRecursively)

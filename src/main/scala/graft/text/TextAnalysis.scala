@@ -55,15 +55,11 @@ object TextAnalysis {
     }
   }
 
-  /** Quality metrics (length / punctuation / stopword ratios — the classic
+  /** Quality metrics (length / alphabetic / stopword ratios — the classic
     * heuristic pre-filters for LLM training corpora). */
-  def nTokens(text: Column): Column = tokenCount(text)
   def meanTokenLen(text: Column): Column =
     length(regexp_replace(trim(text), " ", "")).cast("double") /
       tokenCount(text)
-  def punctRatio(text: Column): Column =
-    (length(text) - length(regexp_replace(text, "[.,;:!?'\"]", "")))
-      .cast("double") / length(text)
   def alphaRatio(text: Column): Column =
     length(regexp_replace(text, "[^A-Za-z]", "")).cast("double") / length(text)
   def stopwordRatio(text: Column): Column =
@@ -83,24 +79,6 @@ object TextAnalysis {
     * key for training corpora). */
   def fingerprint(text: Column): Column =
     md5(regexp_replace(lower(trim(text)), "\\s+", " "))
-
-  /** 64-bit rolling-hash-style fingerprint (xxhash64 of normalized text) —
-    * cheaper join key than the md5 hex string at scale. */
-  def fingerprint64(text: Column): Column =
-    xxhash64(regexp_replace(lower(trim(text)), "\\s+", " "))
-
-  /** Annotate a documents DataFrame with all analysis columns. */
-  def annotate(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
-    df.withColumn("n_tokens", tokenCount(t))
-      .withColumn("mean_token_len", meanTokenLen(t))
-      .withColumn("punct_ratio", punctRatio(t))
-      .withColumn("alpha_ratio", alphaRatio(t))
-      .withColumn("stopword_ratio", stopwordRatio(t))
-      .withColumn("quality", qualityScore(t))
-      .withColumn("pred_lang", langId(t))
-      .withColumn("fingerprint", fingerprint(t))
-  }
 
   final case class CompressionRow(doc_id: Long, raw_len: Long, comp_len: Long)
 

@@ -388,4 +388,172 @@ class IngestSpec extends AnyFunSuite {
     // "fragment" (1 field) dropped; "3," (2 fields, empty second) kept
     assert(rows.map(_._1).toSet == Set(1, 2, 3), rows.mkString(","))
   }
+
+  // ---- scan packing ------------------------------------------------------
+  //
+  // gz and zip objects are whole units of scan work. Spark's default
+  // packing charges each a 4 MB open cost, which for small log objects
+  // means counting files, largest first, so the big objects shared one
+  // task. The readers pack by compressed bytes instead; these tests pin
+  // that on a lake of 4 large and 12 small objects per format.
+
+  private lazy val lake = {
+    import java.util.zip.{GZIPOutputStream, ZipEntry, ZipOutputStream}
+    val dir = Files.createTempDirectory("graft_packing")
+    val rnd = new scala.util.Random(7)
+    def body(rows: Int, from: Int): Seq[(Int, String)] =
+      (from until from + rows).map(k => (k, rnd.alphanumeric.take(16).mkString))
+    def gz(name: String, text: String): String = {
+      val p = dir.resolve(name)
+      val out = new GZIPOutputStream(Files.newOutputStream(p))
+      out.write(text.getBytes("UTF-8")); out.close()
+      p.toString
+    }
+    def zip(name: String, text: String): String = {
+      val p = dir.resolve(name)
+      val out = new ZipOutputStream(Files.newOutputStream(p))
+      out.putNextEntry(new ZipEntry("log.csv"))
+      out.write(text.getBytes("UTF-8")); out.closeEntry(); out.close()
+      p.toString
+    }
+    val sizes = Seq.fill(4)(6000) ++ Seq.fill(12)(100)
+    val objects = sizes.zipWithIndex.map { case (n, i) =>
+      val rows = body(n, i * 10000)
+      val lines = rows.map { case (k, v) => s"$k,$v" }
+      // one over-long row per CSV object: a parse error for csvWithErrors
+      val csvText = ("k,v" +: lines :+ s"$i,x,y,TOOMANY").mkString("\n") + "\n"
+      val jsonText = rows.map { case (k, v) => s"""{"k":$k,"v":"$v"}""" }
+        .mkString("\n") + "\n"
+      (gz(s"o$i.csv.gz", csvText), gz(s"o$i.json.gz", jsonText),
+        zip(s"o$i.zip", lines.mkString("\n") + "\n"))
+    }
+    (objects.map(_._1), objects.map(_._2), objects.map(_._3))
+  }
+
+  private val packSchema = {
+    import graft.schema.{DataTypeSchema, FieldSpec, InputSerialization,
+      SeqType}
+    DataTypeSchema("pack", Seq(FieldSpec("k", SeqType.SBigint),
+      FieldSpec("v", SeqType.SString())), InputSerialization(csvHeader = true))
+  }
+
+  /** Rows as a multiset of printed cells. */
+  private def bag(df: org.apache.spark.sql.DataFrame): Map[Seq[String], Int] =
+    df.collect().toSeq.map(_.toSeq.map(String.valueOf))
+      .groupBy(identity).map { case (r, rs) => r -> rs.size }
+
+  /** Asserts the packing contract of one reader call: every object is
+    * read whole by one task, the 4 large objects (the first 4 paths) run
+    * in 4 distinct tasks, the frame lives in the caller's session, and the
+    * caller's open cost is untouched. `placed` is the reader's output as
+    * (spark_partition_id, file) rows. */
+  private def assertPacked(paths: Seq[String],
+      df: org.apache.spark.sql.DataFrame,
+      placed: org.apache.spark.sql.DataFrame, openCostBefore: String): Unit = {
+    val byFile = placed.distinct().collect().toSeq
+      .groupBy(r => new java.io.File(new java.net.URI(r.getString(1))).getPath)
+      .map { case (f, rs) => f -> rs.map(_.getInt(0)) }
+    assert(df.sparkSession eq spark, "frame must be in the caller's session")
+    assert(spark.conf.get("spark.sql.files.openCostInBytes") == openCostBefore)
+    assert(byFile.keySet == paths.toSet, byFile.keySet)
+    byFile.foreach { case (f, ps) =>
+      assert(ps.size == 1, s"$f split across tasks $ps") }
+    val large = paths.take(4).map(byFile(_).head)
+    assert(large.distinct.size == 4,
+      s"large objects share tasks: ${paths.take(4).zip(large)}")
+  }
+
+  test("csv packs whole gz objects by bytes: the 4 large objects land in " +
+      "4 tasks, rows equal a plain read") {
+    import org.apache.spark.sql.functions.{input_file_name, spark_partition_id}
+    val paths = lake._1
+    val openCost = spark.conf.get("spark.sql.files.openCostInBytes")
+    val df = IngestReader.csv(spark, packSchema, paths: _*)
+    assertPacked(paths, df,
+      df.select(spark_partition_id(), input_file_name()), openCost)
+    val plain = spark.read.option("header", true).option("multiLine", true)
+      .csv(paths: _*)
+    assert(bag(df) == bag(plain))
+  }
+
+  test("json packs whole gz objects by bytes, inference pass included") {
+    import org.apache.spark.sql.functions.{input_file_name, spark_partition_id}
+    import graft.schema.InputSerialization
+    val paths = lake._2
+    val schema = packSchema.copy(input = InputSerialization(jsonType = true))
+    val openCost = spark.conf.get("spark.sql.files.openCostInBytes")
+    val df = IngestReader.json(spark, schema, paths: _*)
+    assertPacked(paths, df,
+      df.select(spark_partition_id(), input_file_name()), openCost)
+    assert(bag(df) == bag(spark.read.json(paths: _*).select("k", "v")))
+  }
+
+  test("zipCsv packs whole zip objects by bytes") {
+    import org.apache.spark.sql.functions.{input_file_name, spark_partition_id}
+    import graft.schema.InputSerialization
+    val paths = lake._3
+    val schema = packSchema.copy(input = InputSerialization(compression = "ZIP"))
+    val openCost = spark.conf.get("spark.sql.files.openCostInBytes")
+    val df = IngestReader.zipCsv(spark, schema, paths: _*)
+    assertPacked(paths, df,
+      df.select(spark_partition_id(), input_file_name()), openCost)
+    val plain = spark.read.format("binaryFile").load(paths: _*)
+      .collect().toSeq.flatMap { r =>
+        val zis = new java.util.zip.ZipInputStream(
+          new java.io.ByteArrayInputStream(r.getAs[Array[Byte]]("content")))
+        zis.getNextEntry
+        new String(zis.readAllBytes(), "UTF-8").split("\n").toSeq
+          .map(_.split(",").toSeq)
+      }
+    assert(bag(df) == plain.groupBy(identity).map { case (r, rs) =>
+      r -> rs.size })
+  }
+
+  test("csvWithErrors packs whole gz objects by bytes; error rows keep " +
+      "their object's path") {
+    import org.apache.spark.sql.functions.{col, spark_partition_id}
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val paths = lake._1
+    val openCost = spark.conf.get("spark.sql.files.openCostInBytes")
+    val (good, errors) =
+      IngestReader.csvWithErrors(spark, packSchema, "job", paths: _*)
+    // each object holds one parse error, so the error rows place every
+    // object in its task (the good rows are read back from the cache,
+    // where input_file_name is empty)
+    assertPacked(paths, good,
+      errors.select(spark_partition_id(), col("path")), openCost)
+    assert(errors.count() == paths.size)
+    val plain = spark.read.option("header", true).option("multiLine", true)
+      .option("columnNameOfCorruptRecord", "_corrupt_record")
+      .schema(StructType(packSchema.rawSchema.fields :+
+        StructField("_corrupt_record", StringType)))
+      .csv(paths: _*)
+    assert(bag(good) == bag(plain.where(col("_corrupt_record").isNull)
+      .drop("_corrupt_record")))
+  }
+
+  test("a non-newline RecordDelimiter parses alike on the csv and " +
+      "csvWithErrors paths") {
+    import graft.schema.{DataTypeSchema, FieldSpec, InputSerialization,
+      SeqType}
+    val schema = DataTypeSchema("semi", Seq(FieldSpec("k", SeqType.SInteger),
+      FieldSpec("v", SeqType.SString())),
+      InputSerialization(csvHeader = true, recordDelimiter = ";"))
+    val p = tmpFile("semi.csv", "k,v;1,a;2,b;3,c;")
+    val want = Map(Seq("1", "a") -> 1, Seq("2", "b") -> 1, Seq("3", "c") -> 1)
+    assert(bag(IngestReader.csv(spark, schema, p)) == want)
+    val (good, errors) = IngestReader.csvWithErrors(spark, schema, "job", p)
+    assert(bag(good) == want)
+    assert(errors.count() == 0)
+  }
+
+  test("a splittable object smaller than the task count reads") {
+    // byte packing must keep the split size above 0: a 3-byte JSON-lines
+    // object over 4 cores is under one byte per core
+    import graft.schema.InputSerialization
+    val p = tmpFile("tiny.json", "{}\n")
+    val schema = packSchema.copy(input = InputSerialization(jsonType = true))
+    assert(IngestReader.json(spark, schema, p).count() ==
+      spark.read.json(p).count())
+  }
 }

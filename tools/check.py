@@ -16,12 +16,20 @@ above goes through Python ints and cannot see that; the dtype compare can.
 This exact gap produced red driver rows in rounds 4 (q150) and 5
 (q231/q235/q237) while this checker showed green.
 
+Crashed queries: graft.Verify lists every query that threw (and so wrote
+no parquet) in failed.json; each one listed there fails here too, so a crash
+cannot drop out of the "N/N pass" count.
+
 Self-test: `python3 tools/check.py --selftest` seeds one uncast-SUM oracle
-against an int64 result and asserts the dtype gate fails it.
+against an int64 result and asserts the dtype gate fails it, and seeds a
+dump whose failed.json lists a crashed query and asserts that query fails.
 """
+import glob
 import json
 import math
+import os
 import sys
+import tempfile
 
 import duckdb
 
@@ -88,23 +96,37 @@ def selftest():
     # And a cast oracle must pass.
     ok_df = con.sql("SELECT CAST(SUM(v) AS BIGINT) AS s FROM t").df()
     assert dtype_mismatches(got_df, ok_df) == []
-    print("selftest OK: uncast HUGEINT oracle is caught, cast one passes")
+    # A dump with one passing query and one that crashed in Verify.
+    with tempfile.TemporaryDirectory() as out:
+        os.makedirs(f"{out}/q1_ok")
+        con.sql(f"COPY (SELECT 1 AS a) TO '{out}/q1_ok/part.parquet' "
+                "(FORMAT PARQUET)")
+        json.dump({"q1_ok": "SELECT 1 AS a", "q2_crash": "SELECT 2 AS a"},
+                  open(f"{out}/oracle_sql.json", "w"))
+        json.dump({"q2_crash": "java.lang.IllegalStateException"},
+                  open(f"{out}/failed.json", "w"))
+        total, failed = check(out, duckdb.connect())
+    assert total == 2 and failed == ["q2_crash"], (total, failed)
+    print("selftest OK: uncast HUGEINT oracle is caught, cast one passes; "
+          "a query in failed.json fails")
 
 
-def main():
-    if len(sys.argv) > 1 and sys.argv[1] == "--selftest":
-        selftest()
-        return
-    out_dir, sf_dir = sys.argv[1], sys.argv[2]
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{sf_dir}/{t}.parquet')")
+def check(out_dir, con):
+    """Compares every query of a Verify dump with its oracle over `con`.
+    Returns (number of queries, failed names)."""
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    crashed_file = f"{out_dir}/failed.json"
+    crashed = (json.load(open(crashed_file))
+               if os.path.isfile(crashed_file) else {})
     failed = []
-    import glob
-    names = sorted(d.split("/")[-1] for d in glob.glob(f"{out_dir}/*")
-                   if not d.endswith(".json"))
+    for name, cls in sorted(crashed.items()):
+        print(f"  {name}: FAILED IN VERIFY ({cls})")
+        failed.append(name)
+    # a crashed query's directory can only be a stale earlier result
+    names = sorted(n for n in (d.split("/")[-1]
+                               for d in glob.glob(f"{out_dir}/*")
+                               if not d.endswith(".json"))
+                   if n not in crashed)
     for name in names:
         # materialize each side ONCE — the value compare (fetchall) and
         # the driver-parity dtype gate (.df()) both read the temp table,
@@ -151,7 +173,20 @@ def main():
                 failed.append(name)
             else:
                 print(f"  {name}: OK rows={len(got)}")
-    print(f"\n{len(names) - len(failed)}/{len(names)} pass")
+    return len(names) + len(crashed), failed
+
+
+def main():
+    if len(sys.argv) > 1 and sys.argv[1] == "--selftest":
+        selftest()
+        return
+    out_dir, sf_dir = sys.argv[1], sys.argv[2]
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
+                f"read_parquet('{sf_dir}/{t}.parquet')")
+    total, failed = check(out_dir, con)
+    print(f"\n{total - len(failed)}/{total} pass")
     if failed:
         print("FAILED:", failed)
         sys.exit(1)
